@@ -1,0 +1,1 @@
+"""Layered, oracle-checked benchmark of the engine (see README.md)."""
