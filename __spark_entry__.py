@@ -55,36 +55,25 @@ def entry(spark: SparkSession) -> DataFrame:
 # Rotation-policy amendment (round 13, r12 verdict item 2/5): an
 # IMPLEMENTATION change resets a name's staleness. The rotation was
 # keyed to name-verification age only, so the queries rewritten in
-# the r12 optimization round (qe33 driver PageRank, qv17 argmin fold,
-# qv18 gram kernel, qv20/qt19 bm25+fold, qt20 literalized argmax,
-# qd17 one-pass edge build, qm09 bounded probe) would have waited a
-# full rotation cycle before the driver oracle ever saw the new code.
-# They now jump to rank 0 (the never-gated slot) until a CORRECTNESS
-# snapshot hash-passes them on the new implementation. qt01's rewrite
-# WAS driver-gated in r12 (hash-PASS on the repartitioned plan), so
-# it folds to the newest rank with the rest of the r12 snapshot.
+# the r12 optimization round would have waited a full rotation cycle
+# before the driver oracle ever saw the new code; they jumped to
+# rank 0 (the never-gated slot) until a CORRECTNESS snapshot
+# hash-passed them on the new implementation (r13 did, for all
+# eight). A rewrite of a query whose oracle runs in Tier-1's
+# test_oracle_parity (qv11's re-point onto the fold kernel, qt01's
+# repartition) stays at its rank: Tier-1 already hash-checks the new
+# code.
 _GATED_ROUNDS: list[list[str]] = [
-    # r13 front: implementation changed in round 12, never
-    # driver-gated on the new code (see the policy amendment above).
-    ["qe33", "qv17", "qv18", "qv20", "qt19", "qt20", "qd17", "qm09"],
-    # r08-block remainder (the r12 snapshot re-verified 37 of the 50
-    # r08-rank names; these 13 are the stalest NAME-verified queries).
-    ["qc05", "qc06", "qd04", "qd08", "qe06", "qe07", "qg06",
-     "qm05", "qs05", "qs06", "qt06", "qt07", "qv05"],
-    # r09 re-verification (CORRECTNESS_r09.json: 49 hash-PASS + qv07
-    # rows-only by design — the old r04 remainder block plus
-    # qj05/qj06/qx06 from r05; qc11 dropped, never a live name;
-    # qm09 moved to the r13 front on its r12 rewrite).
-    ["q33", "qw09"]
-    + [f"qc{i:02d}" for i in range(7, 15) if i != 11]
-    + ["qd05", "qd09", "qd10", "qd11"]
-    + [f"qe{i:02d}" for i in range(8, 21)]
-    + ["qj05", "qj06"]
-    + [f"qm{i:02d}" for i in range(6, 13) if i not in (7, 9)]
-    + ["qs07"]
-    + [f"qt{i:02d}" for i in range(8, 16)]
-    + ["qv06", "qv07", "qv09", "qv10", "qv11", "qv12"]
-    + ["qx06"],
+    # r09 re-verification remainder (CORRECTNESS_r09.json: the r04
+    # remainder block plus qj05/qj06/qx06 from r05; qc11 dropped,
+    # never a live name; the r13 snapshot re-verified the other 30).
+    ["q33"]
+    + ["qc12", "qc13", "qc14"]
+    + ["qd09"]
+    + [f"qe{i:02d}" for i in range(12, 21)]
+    + ["qm12"]
+    + [f"qt{i:02d}" for i in range(12, 16)]
+    + ["qv12"],
     # r10 re-verification (CORRECTNESS_r10.json: 50/50 hash-PASS,
     # zero rows-only, zero errors — the first all-oracle-bearing
     # snapshot. The old r05-remainder block plus qd15/qd17/qm16 from
@@ -124,6 +113,18 @@ _GATED_ROUNDS: list[list[str]] = [
     + [f"qt{i:02d}" for i in range(1, 6)]
     + ["qv01", "qv02", "qv03", "qv04", "qv08"]
     + [f"qx{i:02d}" for i in range(1, 6)],
+    # r13 re-verification (CORRECTNESS_r13.json: 50/50 green — the
+    # eight r12 rewrites hash-PASSED on their new code, plus the
+    # r08-block remainder and the head of the r09 rank; qv07 green
+    # rows-only, since removed from the registry with its kernel).
+    ["qe33", "qv17", "qv18", "qv20", "qt19", "qt20", "qd17", "qm09"]
+    + ["qc05", "qc06", "qd04", "qd08", "qe06", "qe07", "qg06",
+       "qm05", "qs05", "qs06", "qt06", "qt07", "qv05"]
+    + ["qw09", "qc07", "qc08", "qc09", "qc10", "qd05", "qd10", "qd11"]
+    + [f"qe{i:02d}" for i in range(8, 12)]
+    + ["qj05", "qj06", "qm06", "qm08", "qm10", "qm11", "qs07"]
+    + [f"qt{i:02d}" for i in range(8, 12)]
+    + ["qv06", "qv07", "qv09", "qv10", "qv11", "qx06"],
 ]
 
 _GATED_PASS = frozenset(n for rnd in _GATED_ROUNDS for n in rnd)

@@ -421,24 +421,6 @@ def qv06(spark, sf_dir):
     )
 
 
-@query("qv07_knn_vectorized")  # numpy FP fold order → rows-only oracle
-def qv07(spark, sf_dir):
-    """Exact brute-force top-5 via the Arrow/numpy GEMM path
-    (mapInPandas, partition-local top-k, window merge) — same answer
-    as qv01 up to FP fold order (recall vs qv01 asserted ≥99% in
-    tests); the formulation that wins when dims × queries make
-    per-element JVM expressions the bottleneck."""
-    from ml_data_wrangler_spark.operators.similarity import (
-        brute_force_topk_vectorized,
-    )
-
-    emb = t(spark, sf_dir, "embeddings")
-    queries_df = emb.where(F.col("vec_id") % 20 == 0)
-    return brute_force_topk_vectorized(emb, queries_df, k=5).select(
-        "query_id", "neighbor_id", "sim", "rank"
-    )
-
-
 @query(
     "qd09_embedding_neardup_verdicts",
     oracle=f"""
@@ -661,37 +643,31 @@ FROM embeddings WHERE vec_id % 20 = 0
 """,
 )
 def qv11(spark, sf_dir):
-    """The Arrow/numpy GEMM KNN path, gate-pinned: run BOTH exact
-    formulations (qv01's per-element JVM fold and qv07's mapInPandas
-    GEMM) over the same query sample inside one job, measure top-5
-    neighbor agreement per query, and emit the qe07-style bounded
-    boolean — mean recall ≥ 0.99 — that the oracle pins TRUE (the two
-    paths differ only in float fold order on near-ties). This promotes
-    the unit-test assertion into the driver's correctness gate, so a
-    regression in the Pandas-UDF plumbing (batch shape, partition-
-    local top-k, merge window) fails the gate, not just CI."""
-    from ml_data_wrangler_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_vectorized,
-    )
-
+    """The production fold kernel, gate-pinned: run BOTH exact
+    formulations — brute_force_topk_fold (qv01's kernel) and the
+    relational brute_force_topk it must reproduce — over the same
+    query sample inside one job, count per query the top-5 rows that
+    agree on the FULL (query_id, neighbor_id, sim, rank) tuple, and
+    emit the qe07-style bounded boolean — mean recall ≥ 0.99 — that
+    the oracle pins TRUE. The two kernels are bit-identical by
+    construction (same ascending fold, same rounding, same total
+    order), so any value drift in the shared fold tile or any break
+    in the fold kernel's Pandas-UDF plumbing (batch shape,
+    chunk-local top-k, merge window) is a miss that fails the gate,
+    not just CI."""
     emb = t(spark, sf_dir, "embeddings")
     queries_df = emb.where(F.col("vec_id") % 20 == 0)
-    exact = brute_force_topk(emb, queries_df, k=5).select(
-        "query_id", F.col("neighbor_id").alias("n_exact")
-    )
-    gemm = brute_force_topk_vectorized(emb, queries_df, k=5).select(
-        "query_id", F.col("neighbor_id").alias("n_gemm")
+    key = ["query_id", "neighbor_id", "sim", "rank"]
+    exact = brute_force_topk(emb, queries_df, k=5).select(*key)
+    fold = (
+        brute_force_topk_fold(emb, queries_df, k=5)
+        .select(*key)
+        .withColumn("_hit", F.lit(1))
     )
     per_query = (
-        exact.join(
-            gemm,
-            (exact["query_id"] == gemm["query_id"])
-            & (exact["n_exact"] == gemm["n_gemm"]),
-            "left",
-        )
-        .groupBy(exact["query_id"].alias("qid"))
-        .agg((F.count(gemm["n_gemm"]) / F.lit(5.0)).alias("recall"))
+        exact.join(fold, key, "left")
+        .groupBy("query_id")
+        .agg((F.count("_hit") / F.lit(5.0)).alias("recall"))
     )
     return per_query.agg(
         F.count("*").alias("n_queries"),

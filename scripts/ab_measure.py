@@ -1,14 +1,15 @@
-"""Interleaved A/B timing for the round-13 recompute-vs-materialize
-and repartition questions (r12 verdict items 3 and 6).
+"""Interleaved A/B timing of two plan variants that must return the
+same rows (round-13 repartition and bm25 scoring questions).
 
-The box is bimodal (probe_regime.py), so A and B run INTERLEAVED
-(A,B,A,B,...) — regime drift hits both arms — with probe brackets
-before/after and a per-pair probe so each pair can be regime-tagged.
-Row-level equality of A and B is asserted once up front.
+A and B run INTERLEAVED (A,B,A,B,...) so machine-load drift hits both
+arms, with a job-latency probe before the pairs and after each pair
+so every pair can be load-tagged. Row-level equality of A and B
+(order-insensitive) is asserted once up front. perfbench/run.py is
+the repo's benchmark; this script answers one A/B question at a time.
 
 Usage:
-    PYTHONPATH=/root/repo python scripts/ab_measure.py qt20 [reps]
-    PYTHONPATH=/root/repo python scripts/ab_measure.py qt01 [reps]
+    PYTHONPATH=. python scripts/ab_measure.py qt01 [reps]
+    PYTHONPATH=. python scripts/ab_measure.py bm25k3 [reps]
 """
 
 from __future__ import annotations
@@ -38,16 +39,7 @@ def main() -> None:
     # warm-up identical to bench.py
     queries["q01_pricing_summary"](spark, sf_dir).count()
 
-    if exp == "qt20":
-        from ml_data_wrangler_spark.plans.text_queries import _qt20_impl
-
-        def build_a():  # current production form: no per-step ckpt
-            return _qt20_impl(spark, sf_dir, checkpoint_per_step=False)
-
-        def build_b():  # re-materialized per step
-            return _qt20_impl(spark, sf_dir, checkpoint_per_step=True)
-
-    elif exp == "qt01":
+    if exp == "qt01":
 
         def build_a():  # current production form: ensure_parallelism
             return queries["qt01_top_tokens"](spark, sf_dir)
@@ -104,7 +96,9 @@ def main() -> None:
 
     rows_a = [tuple(r) for r in build_a().collect()]
     rows_b = [tuple(r) for r in build_b().collect()]
-    assert rows_a == rows_b, "A/B variants disagree — not a pure perf question"
+    assert sorted(rows_a) == sorted(rows_b), (
+        "A/B variants disagree — not a pure perf question"
+    )
 
     def probe() -> float:
         samples = []

@@ -394,34 +394,6 @@ def test_dedup_pipeline_tiers(spark):
     assert out[5] == (False, "exact_duplicate")
 
 
-def test_vectorized_knn_matches_jvm(spark, sf_dir):
-    """The numpy GEMM path must reproduce the JVM expression path's
-    neighbor sets (both exact; only FP fold order differs)."""
-    from pyspark.sql import functions as F2
-
-    from ml_data_wrangler_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_vectorized,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.where(F2.col("vec_id") % 20 == 0)
-    jvm = brute_force_topk(emb, queries, k=5)
-    vec = brute_force_topk_vectorized(emb, queries, k=5)
-    jvm_sets = {
-        r["query_id"]: set() for r in jvm.select("query_id").distinct().collect()
-    }
-    for r in jvm.collect():
-        jvm_sets[r["query_id"]].add(r["neighbor_id"])
-    agree = total = 0
-    vec_rows = vec.collect()
-    assert len(vec_rows) == sum(len(s) for s in jvm_sets.values())
-    for r in vec_rows:
-        total += 1
-        agree += r["neighbor_id"] in jvm_sets[r["query_id"]]
-    assert agree / total >= 0.99
-
-
 def test_fold_knn_bit_identical_to_jvm(spark, sf_dir):
     """brute_force_topk_fold must reproduce the relational kernel
     ROW-FOR-ROW — not just neighbor sets: same ascending per-dim
@@ -439,6 +411,35 @@ def test_fold_knn_bit_identical_to_jvm(spark, sf_dir):
     fold = sorted(map(tuple, brute_force_topk_fold(emb, queries, k=5).collect()))
     assert len(fold) > 0
     assert fold == jvm
+
+
+def test_fold_knn_and_block_allpairs_share_the_fold_tile(spark, sf_dir):
+    """The top-k and all-pairs kernels score with one fold tile, so a
+    pair both emit must carry the bit-identical sim — whether the
+    all-pairs side scores it in a triangle or a cross-chunk tile
+    (tile_rows below the block size forces both)."""
+    from ml_data_wrangler_spark.operators.similarity import (
+        block_allpairs_cosine,
+        brute_force_topk_fold,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    queries = emb.where(F.col("vec_id") % 20 == 0)
+    topk = brute_force_topk_fold(emb, queries, k=5).select(
+        F.least("query_id", "neighbor_id").alias("vec_a"),
+        F.greatest("query_id", "neighbor_id").alias("vec_b"),
+        F.col("sim").alias("sim_topk"),
+    )
+    pairs = block_allpairs_cosine(
+        emb.withColumn("blk", F.lit(0)),
+        block_col="blk",
+        sim_threshold=-1.0,
+        tile_rows=128,
+    )
+    rows = topk.join(pairs, ["vec_a", "vec_b"], "left").collect()
+    assert len(rows) > 0
+    assert all(r["sim"] is not None for r in rows), "pair missing from all-pairs"
+    assert [r["sim"].hex() for r in rows] == [r["sim_topk"].hex() for r in rows]
 
 
 def test_fold_knn_chunk_boundaries_are_value_neutral(spark, sf_dir):

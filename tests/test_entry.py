@@ -25,13 +25,12 @@ def test_contract_consistency():
     # remains: model-output streams (LDA/coherence — inherently
     # non-SQL) and raw approximate/FP-fold pair streams whose
     # MECHANISMS are gate-checked by oracle duals (qv05→qv12,
-    # qv07→qv11, qv08/qd08→qv06/qd04 respectively).
+    # qv08/qd08→qv06/qd04 respectively).
     assert rows_only == {
         "qd08_simhash_pairs",
         "qm03_lda_topics",
         "qm04_lda_coherence_sweep",
         "qm07_cv_coherence_sweep",
         "qv05_ivf_ann",
-        "qv07_knn_vectorized",
         "qv08_tiered_cosine_pairs",
     }

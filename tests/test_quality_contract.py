@@ -85,8 +85,6 @@ def test_registry_has_no_undeclared_duplicate_queries():
     ALLOWED_GROUPS = [
         # count-based vs PPJoin prefix-filter candidate generation
         {"qd02_ngram_jaccard_pairs", "qd06_prefix_jaccard_pairs"},
-        # JVM fold vs Arrow GEMM physical strategy (qv11 pins agreement)
-        {"qv01_knn_bruteforce", "qv07_knn_vectorized"},
         # batch aggregate vs its Structured Streaming duals (tumbling
         # window job / late-data watermark job) — the streaming runs
         # are the point, the matching schema is the gate
@@ -186,9 +184,11 @@ def test_gate_lists_have_no_stale_names():
 
     shorts = {e._short(n): n for n in registry.queries()}
     assert len(shorts) == len(registry.queries())  # short names unique
-    # qc11 was removed as a near-duplicate during round 4 but stays in
-    # _GATED_PASS harmlessly (documented inline); no other exceptions.
-    known_removed = {"qc11"}
+    # qc11 (a round-4 near-duplicate) and qv07 (the deleted numpy-GEMM
+    # top-k, a duplicate of qv01's relation) left the registry but stay
+    # in _GATED_PASS harmlessly (documented inline); no other
+    # exceptions.
+    known_removed = {"qc11", "qv07"}
     stale = sorted(e._GATED_PASS - set(shorts) - known_removed)
     assert not stale, f"gate-list names with no registry query: {stale}"
     all_round_names = [n for rnd in e._GATED_ROUNDS for n in rnd]
