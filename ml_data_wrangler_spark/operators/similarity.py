@@ -473,6 +473,8 @@ def _fold_tile(a, b, norm_a, norm_b):
 # cells per task — the same ceiling the in-scorer chunk loop uses, so
 # one (ci, cj) tile pair is roughly one chunk iteration of work
 _TILE_ROWS = 2048
+# block_allpairs_cosine's row-chunk ceiling inside one group
+_ALLPAIRS_ROW_CHUNK = 4096
 
 
 def block_allpairs_cosine(
@@ -481,7 +483,6 @@ def block_allpairs_cosine(
     sim_threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    row_chunk: int = 4096,
     tile_rows: int | None = None,
 ) -> DataFrame:
     """Exact all-pairs cosine WITHIN each block as one Arrow/numpy
@@ -542,7 +543,7 @@ def block_allpairs_cosine(
         nrm_a = _fold_norms(va)
         nrm_b = nrm_a if upper else _fold_norms(vb)
         # bound the score tile at ~4M cells whatever the group size
-        chunk = max(128, min(row_chunk, 4_000_000 // max(len(ids_b), 1)))
+        chunk = max(128, min(_ALLPAIRS_ROW_CHUNK, 4_000_000 // max(len(ids_b), 1)))
         out_a, out_b, out_s = [], [], []
         for lo in range(0, len(ids_a), chunk):
             hi = min(lo + chunk, len(ids_a))
@@ -1153,12 +1154,15 @@ def pq_reconstruction_report(
     )
 
 
+# allpairs_cosine_topk_dense's rows per BLAS product
+_DENSE_ROW_CHUNK = 128
+
+
 def allpairs_cosine_topk_dense(
     entries: DataFrame,
     dim: int,
     k: int = 20,
     id_col: str = "doc_id",
-    chunk: int = 128,
     max_broadcast_cells: int = 200_000_000,
 ) -> DataFrame:
     """Exact global top-k most-similar pairs over a SMALL dense
@@ -1261,8 +1265,8 @@ def allpairs_cosine_topk_dense(
             for pdf in batches:
                 if pdf.empty:
                     continue
-                for lo in range(0, len(pdf), chunk):
-                    part = pdf.iloc[lo : lo + chunk]
+                for lo in range(0, len(pdf), _DENSE_ROW_CHUNK):
+                    part = pdf.iloc[lo : lo + _DENSE_ROW_CHUNK]
                     c = len(part)
                     a_ids = part["id"].to_numpy()
                     a_nrm = part["nrm"].to_numpy()

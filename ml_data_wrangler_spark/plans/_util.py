@@ -99,8 +99,7 @@ def global_row_number(
       * EAGER: calling this helper executes Spark jobs at
         query-CONSTRUCTION time (the checkpoint materializes
         immediately), so callers are exempt from any
-        construction-time-lazy assumption — tests exempt them via
-        ``_EAGER_CONSTRUCT``.
+        construction-time-lazy assumption.
       * NOT FAULT-TOLERANT: localCheckpoint blocks live on executors
         and are lost on executor failure (unlike reliable
         checkpoints). On a real cluster with a configured checkpoint

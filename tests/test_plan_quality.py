@@ -105,29 +105,31 @@ def test_jaccard_plan_parallel_and_no_nested_loop(spark, sf_dir, q):
     assert "DataFilters: [isnotnull(doc_id" in plan or "transform(sequence" not in plan.split("FileScan")[1][:600]
 
 
-# Queries whose CONSTRUCTION executes distributed jobs (model fits,
-# streaming runs, iterative connected-components) — their returned
-# frame is a memory-sink scan or a driver-assembled result, so a
-# window audit on the final plan is vacuous; each family has its own
-# dedicated audit above/below instead.
-_EAGER_CONSTRUCT = frozenset(
-    [f"qs{i:02d}" for i in range(1, 9)]
-    + ["qm03", "qm04", "qm07", "qv05", "qv06", "qv12", "qv14", "qd03", "qd07", "qd09"]
-)
+def test_registry_sweep_plan_audits(spark, sf_dir, q):
+    """Registry-wide audits, one plan build per query:
 
+    * NO query plans an unpartitioned window or an Exchange
+      SinglePartition sort stage (the global-rank scale trap qt13 fell
+      into in round 3). Global aggregations to ONE ROW legitimately
+      plan Exchange SinglePartition for the final scalar collapse, so
+      only WINDOW-bearing single-partition exchanges fail.
+    * Iterative/multi-reference lineage must be checkpointed (qd07's
+      per-round rule): no STATIC plan may re-scan its parquet sources
+      more than 48 times or contain more than 120 Exchange nodes.
+      Legitimate multi-branch sweeps top out at ~34 scans / ~70
+      exchanges (qv19, qm14); the exponential branching this guards
+      against measured 102-280 scans before the round-4 fixes (qe33
+      pre-checkpoint 102, qd17 248, qv18 280).
 
-def test_registry_sweep_no_unpartitioned_window(spark, sf_dir, q):
-    """Registry-wide audit: NO query plans an unpartitioned window or
-    an Exchange SinglePartition sort stage (the global-rank scale trap
-    qt13 fell into in round 3). Lazily-constructed queries only (see
-    _EAGER_CONSTRUCT); global aggregations to ONE ROW legitimately
-    plan Exchange SinglePartition for the final scalar collapse, so
-    only WINDOW-bearing single-partition exchanges fail."""
+    Queries that run jobs while building (model fits, streaming runs,
+    checkpoints) are audited too: their final plan is a memory-sink or
+    checkpoint scan, which passes both checks cheaply."""
     offenders = []
     for name, fn in q.items():
-        if name.split("_", 1)[0] in _EAGER_CONSTRUCT:
-            continue
         plan = _plan(fn(spark, sf_dir))
+        scans, exch = plan.count("Scan parquet"), plan.count("Exchange")
+        if scans > 48 or exch > 120:
+            offenders.append(f"{name}: {scans} scans, {exch} exchanges")
         if "Window" not in plan:
             continue
         for line in plan.splitlines():
@@ -142,25 +144,6 @@ def test_registry_sweep_no_unpartitioned_window(spark, sf_dir, q):
             prev = segs[i - 1].splitlines()[-4:]
             if any("Window " in ln for ln in prev):
                 offenders.append(f"{name}: Window over Exchange SinglePartition")
-    assert not offenders, offenders
-
-
-def test_registry_sweep_no_plan_explosion(spark, sf_dir, q):
-    """Registry-wide audit: iterative/multi-reference lineage must be
-    checkpointed (qd07's per-round rule) — no query's STATIC plan may
-    re-scan its parquet sources more than 48 times or contain more
-    than 120 Exchange nodes. Legitimate multi-branch sweeps top out
-    at ~34 scans / ~70 exchanges today (qv19, qm14); the exponential
-    branching this guards against measured 102-280 scans before the
-    round-4 fixes (qe33 pre-checkpoint 102, qd17 248, qv18 280)."""
-    offenders = []
-    for name, fn in q.items():
-        if name.split("_", 1)[0] in _EAGER_CONSTRUCT:
-            continue
-        plan = _plan(fn(spark, sf_dir))
-        scans, exch = plan.count("Scan parquet"), plan.count("Exchange")
-        if scans > 48 or exch > 120:
-            offenders.append(f"{name}: {scans} scans, {exch} exchanges")
     assert not offenders, offenders
 
 

@@ -171,128 +171,50 @@ def test_bench_tiers_resolve_in_registry():
     assert not set(bench.HEADLINE) & set(bench.HEAVY)
 
 
-def test_gate_lists_have_no_stale_names():
-    """__spark_entry__'s _GATED_ROUNDS short names drive the
-    driver-gate ordering; a stale or misspelled entry silently
-    re-gates green queries (wasting ~1 of the ~50 snapshot slots per
-    bad name) or buries a fresh one. Every listed short name must
-    match exactly one registry query, and no name may appear in two
-    rounds (the rotation rank would be ambiguous)."""
+def test_gate_rotation_advances(tmp_path):
+    """The correctness gate snapshots ~50 queries per round in
+    queries() order, so the order ranks each query by the newest
+    CORRECTNESS_rN.json that shows it green. A new snapshot must move
+    its green names to the newest rank with no edit; a hash mismatch
+    must not advance a query, and a name outside the registry must not
+    enter the order."""
+    import glob
+    import json
+    import os
+    import shutil
+
     import __spark_entry__ as e
 
     from ml_data_wrangler_spark.plans import registry
 
-    shorts = {e._short(n): n for n in registry.queries()}
-    assert len(shorts) == len(registry.queries())  # short names unique
-    # qc11 (a round-4 near-duplicate) and qv07 (the deleted numpy-GEMM
-    # top-k, a duplicate of qv01's relation) left the registry but stay
-    # in _GATED_PASS harmlessly (documented inline); no other
-    # exceptions.
-    known_removed = {"qc11", "qv07"}
-    stale = sorted(e._GATED_PASS - set(shorts) - known_removed)
-    assert not stale, f"gate-list names with no registry query: {stale}"
-    all_round_names = [n for rnd in e._GATED_ROUNDS for n in rnd]
-    assert len(all_round_names) == len(set(all_round_names)), (
-        "a short name appears in more than one _GATED_ROUNDS entry"
-    )
-    # the gate ordering must be a permutation of the registry
-    ordered = list(e.queries())
-    assert sorted(ordered) == sorted(registry.queries())
-    # steady-state rotation: with full coverage, the stalest-verified
-    # names (rank 0 — the r03 block since the r07 fold) must front the
-    # next snapshot
-    rank = {s: i for i, rnd in enumerate(e._GATED_ROUNDS) for s in rnd}
-    head_ranks = [rank[e._short(n)] for n in ordered[:30]]
-    assert head_ranks == sorted(head_ranks) and head_ranks[0] == 0
-
-
-def test_gate_rotation_advances():
-    """The steady-state re-verification rotation must actually rotate
-    (round-7 verdict item 1): _gate_order ranks by the static
-    _GATED_ROUNDS index, so if a round's re-verified names are not
-    MOVED to the newest rank, the next snapshot re-checks the same ~50
-    queries forever and the other blocks go stale. Tripwire: the
-    newest CORRECTNESS_r*.json's green names must hold exactly the
-    newest rotation rank (red test = fold pending, same discipline as
-    test_gate_fold_is_complete)."""
-    import glob
-    import json
-    import os
-    import re
-
-    import __spark_entry__ as e
-
-    root = os.path.dirname(os.path.abspath(e.__file__))
-    gate_files = glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
-    newest = max(
-        gate_files,
-        key=lambda p: int(re.search(r"_r(\d+)", os.path.basename(p)).group(1)),
-    )
-    with open(newest) as fh:
-        results = json.load(fh)
-    # Green = re-verified for rotation purposes (round-8 verdict items
-    # 1+ADVICE): an oracle-bearing query must hash-match (rows_match
-    # alone would let a value-mismatched query advance the rotation),
-    # while a rows-only query (err == 'no_oracle' — the model-based /
-    # non-SQL ops: LDA topics + coherence sweeps, IVF, tiered GEMM,
-    # raw SimHash) counts as green when it ran and produced rows,
-    # since rows-only IS the driver's recorded pass for those. Policy
-    # mirrored in __spark_entry__._GATED_ROUNDS' r08 comment.
-    green = {
-        e._short(n)
-        for n, res in results.items()
-        if (
-            res.get("err") is None
-            and res.get("rows_match")
-            and res.get("schema_match")
-            and res.get("hash_match")
-        )
-        or (res.get("err") == "no_oracle" and (res.get("spark_rows") or 0) > 0)
-    }
-    assert green == set(e._GATED_ROUNDS[-1]), (
-        f"rotation stalled: {os.path.basename(newest)}'s green names must "
-        "be the newest _GATED_ROUNDS entry — move the re-verified names "
-        "to the end of the list in __spark_entry__.py"
-    )
-
-
-def test_gate_fold_is_complete():
-    """Every green name in every CORRECTNESS_r*.json at the repo root
-    must be folded into _GATED_PASS. Three rounds of manual start-of-
-    round folding is two too many (round-5 verdict item 2): a missed
-    fold wastes ~50 driver gate slots re-verifying green queries
-    instead of gating fresh ones. Green uses the SAME predicate as the
-    rotation test (round-9 verdict item 3 — rows_match alone would
-    silently fold a value-mismatched query into _GATED_PASS and never
-    re-front it): oracle-bearing queries need hash+schema+rows,
-    rows-only (err == 'no_oracle') queries count when they produced
-    rows, since rows-only IS the driver's recorded pass for those."""
-    import glob
-    import json
-    import os
-
-    import __spark_entry__ as e
-
-    root = os.path.dirname(os.path.abspath(e.__file__))
-    gate_files = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
+    gate_files = glob.glob(os.path.join(e._ROOT, "CORRECTNESS_r*.json"))
     assert gate_files, "driver correctness files must exist at repo root"
-    unfolded = set()
+    names = list(registry.queries())
+    assert len({e._short(n) for n in names}) == len(names)  # shorts unique
+    rank = e.gate_ranks(e._ROOT)
+    ordered = list(e.queries())
+    assert sorted(ordered) == sorted(names)
+    ranks = [rank.get(e._short(n), 0) for n in ordered]
+    assert ranks == sorted(ranks)  # stalest first
+
     for path in gate_files:
-        with open(path) as fh:
-            results = json.load(fh)
-        for name, res in results.items():
-            green = (
-                res.get("err") is None
-                and res.get("rows_match")
-                and res.get("schema_match")
-                and res.get("hash_match")
-            ) or (
-                res.get("err") == "no_oracle"
-                and (res.get("spark_rows") or 0) > 0
-            )
-            if green and e._short(name) not in e._GATED_PASS:
-                unfolded.add((os.path.basename(path), e._short(name)))
-    assert not unfolded, f"green driver-gated queries missing from _GATED_PASS: {sorted(unfolded)}"
+        shutil.copy(path, tmp_path)
+    green, mismatched = ordered[0], ordered[1]
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True,
+          "spark_rows": 5, "oracle_rows": 5, "err": None}
+    (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps({
+        green: ok,
+        mismatched: {**ok, "hash_match": False},
+        "qz99_not_a_query": ok,
+    }))
+    moved = e.gate_ranks(str(tmp_path))
+    changed = [
+        n for n in names if moved.get(e._short(n)) != rank.get(e._short(n))
+    ]
+    assert changed == [green] and moved[e._short(green)] == 99
+    after = e._gate_order(names, moved)
+    assert sorted(after) == sorted(names)  # the unknown name stays out
+    assert after[-1] == green and after[0] == mismatched
 
 
 def test_sig_rounding_absorbs_ulp_but_keeps_exact_default():
