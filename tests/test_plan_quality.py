@@ -105,31 +105,24 @@ def test_jaccard_plan_parallel_and_no_nested_loop(spark, sf_dir, q):
     assert "DataFilters: [isnotnull(doc_id" in plan or "transform(sequence" not in plan.split("FileScan")[1][:600]
 
 
-def test_registry_sweep_plan_audits(spark, sf_dir, q):
-    """Registry-wide audits, one plan build per query:
+@pytest.fixture(scope="module")
+def registry_plans(spark, sf_dir, q):
+    """Final plan string of every registry query, built once and shared
+    by the registry-wide sweeps below. Queries that run jobs while
+    building (model fits, streaming runs, checkpoints) are included:
+    their final plan is a memory-sink or checkpoint scan, which passes
+    both sweeps cheaply."""
+    return {name: _plan(fn(spark, sf_dir)) for name, fn in q.items()}
 
-    * NO query plans an unpartitioned window or an Exchange
-      SinglePartition sort stage (the global-rank scale trap qt13 fell
-      into in round 3). Global aggregations to ONE ROW legitimately
-      plan Exchange SinglePartition for the final scalar collapse, so
-      only WINDOW-bearing single-partition exchanges fail.
-    * Iterative/multi-reference lineage must be checkpointed (qd07's
-      per-round rule): no STATIC plan may re-scan its parquet sources
-      more than 48 times or contain more than 120 Exchange nodes.
-      Legitimate multi-branch sweeps top out at ~34 scans / ~70
-      exchanges (qv19, qm14); the exponential branching this guards
-      against measured 102-280 scans before the round-4 fixes (qe33
-      pre-checkpoint 102, qd17 248, qv18 280).
 
-    Queries that run jobs while building (model fits, streaming runs,
-    checkpoints) are audited too: their final plan is a memory-sink or
-    checkpoint scan, which passes both checks cheaply."""
+def test_registry_sweep_no_unpartitioned_window(registry_plans):
+    """Registry-wide audit: NO query plans an unpartitioned window or
+    an Exchange SinglePartition sort stage (the global-rank scale trap
+    qt13 fell into in round 3). Global aggregations to ONE ROW
+    legitimately plan Exchange SinglePartition for the final scalar
+    collapse, so only WINDOW-bearing single-partition exchanges fail."""
     offenders = []
-    for name, fn in q.items():
-        plan = _plan(fn(spark, sf_dir))
-        scans, exch = plan.count("Scan parquet"), plan.count("Exchange")
-        if scans > 48 or exch > 120:
-            offenders.append(f"{name}: {scans} scans, {exch} exchanges")
+    for name, plan in registry_plans.items():
         if "Window" not in plan:
             continue
         for line in plan.splitlines():
@@ -144,6 +137,22 @@ def test_registry_sweep_plan_audits(spark, sf_dir, q):
             prev = segs[i - 1].splitlines()[-4:]
             if any("Window " in ln for ln in prev):
                 offenders.append(f"{name}: Window over Exchange SinglePartition")
+    assert not offenders, offenders
+
+
+def test_registry_sweep_no_plan_explosion(registry_plans):
+    """Registry-wide audit: iterative/multi-reference lineage must be
+    checkpointed (qd07's per-round rule) — no query's STATIC plan may
+    re-scan its parquet sources more than 48 times or contain more
+    than 120 Exchange nodes. Legitimate multi-branch sweeps top out
+    at ~34 scans / ~70 exchanges today (qv19, qm14); the exponential
+    branching this guards against measured 102-280 scans before the
+    round-4 fixes (qe33 pre-checkpoint 102, qd17 248, qv18 280)."""
+    offenders = []
+    for name, plan in registry_plans.items():
+        scans, exch = plan.count("Scan parquet"), plan.count("Exchange")
+        if scans > 48 or exch > 120:
+            offenders.append(f"{name}: {scans} scans, {exch} exchanges")
     assert not offenders, offenders
 
 

@@ -171,6 +171,59 @@ def test_bench_tiers_resolve_in_registry():
     assert not set(bench.HEADLINE) & set(bench.HEAVY)
 
 
+def test_gate_lists_have_no_stale_names():
+    """queries() drives the driver-gate ordering; a stale or misspelled
+    name would silently re-gate green queries or bury a fresh one. Short
+    names must be unique (ranks are keyed by them), the order must be a
+    permutation of the registry (snapshot names that left it, such as
+    qc11 and qv07, stay out), and the stalest-verified names front the
+    next snapshot."""
+    import __spark_entry__ as e
+
+    from ml_data_wrangler_spark.plans import registry
+
+    names = list(registry.queries())
+    assert len({e._short(n) for n in names}) == len(names)  # shorts unique
+    ordered = list(e.queries())
+    assert sorted(ordered) == sorted(names)
+    rank = e.gate_ranks(e._ROOT)
+    ranks = [rank.get(e._short(n), 0) for n in ordered]
+    assert ranks == sorted(ranks)  # stalest first
+
+
+def test_gate_fold_is_complete():
+    """Every green name in every CORRECTNESS_r*.json at the repo root
+    must be folded into the rotation: its rank is at least that file's
+    round (a missed fold wastes driver gate slots re-verifying green
+    queries), and every rank names a round whose snapshot shows the
+    query green (a hash mismatch must never advance a query)."""
+    import glob
+    import json
+    import os
+    import re
+
+    import __spark_entry__ as e
+
+    gate_files = glob.glob(os.path.join(e._ROOT, "CORRECTNESS_r*.json"))
+    assert gate_files, "driver correctness files must exist at repo root"
+    rank = e.gate_ranks(e._ROOT)
+    green_in: dict[int, set[str]] = {}
+    for path in gate_files:
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as fh:
+            results = json.load(fh)
+        green_in[rnd] = {
+            e._short(n) for n, res in results.items() if e.gate_green(res)
+        }
+    unfolded = sorted(
+        (rnd, s) for rnd, shorts in green_in.items() for s in shorts
+        if rank.get(s, 0) < rnd
+    )
+    assert not unfolded, f"green gated queries ranked below their round: {unfolded}"
+    unearned = sorted(s for s, rnd in rank.items() if s not in green_in.get(rnd, ()))
+    assert not unearned, f"ranks not backed by a green snapshot: {unearned}"
+
+
 def test_gate_rotation_advances(tmp_path):
     """The correctness gate snapshots ~50 queries per round in
     queries() order, so the order ranks each query by the newest
@@ -187,17 +240,10 @@ def test_gate_rotation_advances(tmp_path):
 
     from ml_data_wrangler_spark.plans import registry
 
-    gate_files = glob.glob(os.path.join(e._ROOT, "CORRECTNESS_r*.json"))
-    assert gate_files, "driver correctness files must exist at repo root"
     names = list(registry.queries())
-    assert len({e._short(n) for n in names}) == len(names)  # shorts unique
     rank = e.gate_ranks(e._ROOT)
     ordered = list(e.queries())
-    assert sorted(ordered) == sorted(names)
-    ranks = [rank.get(e._short(n), 0) for n in ordered]
-    assert ranks == sorted(ranks)  # stalest first
-
-    for path in gate_files:
+    for path in glob.glob(os.path.join(e._ROOT, "CORRECTNESS_r*.json")):
         shutil.copy(path, tmp_path)
     green, mismatched = ordered[0], ordered[1]
     ok = {"rows_match": True, "schema_match": True, "hash_match": True,
