@@ -22,6 +22,7 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 
 def validate_lda_params(num_topics: int, iterations: int, passes: int) -> None:
@@ -49,7 +50,6 @@ def fit_lda(bow_df: DataFrame, k: int, max_iter: int = 20, seed: int = 42,
 def topics_df(model, vocabulary: list[str], n_terms: int = 5) -> DataFrame:
     """M4-ish — describeTopics with term strings resolved from the
     vocabulary; returns DataFrame[topic, term, weight]."""
-    spark = model.describeTopics(n_terms).sparkSession
     vocab_arr = F.array(*[F.lit(w) for w in vocabulary])
     return (
         model.describeTopics(n_terms)
@@ -256,28 +256,47 @@ def lda_sweep(
         raise ValueError(f"coherence must be 'umass' or 'c_v', got {coherence!r}")
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     from ml_data_wrangler_spark.operators.fitting import widen_for_fit
 
     spark = bow_df.sparkSession
     ks = list(k_values)
+    # Tokens are cached BEFORE the bow: the bow's cached plan then reads
+    # the cached tokens, and the coherence pass reuses them instead of
+    # re-running their lineage (scans, joins, Python UDFs).
+    own_tokens = _cache_unless_cached(tokens)
     # Online-LDA iterations run one task per bow partition; a 1-split
-    # bow pins every concurrent fit single-task (fitting.py).
+    # bow pins every concurrent fit single-task (fitting.py). The bow's
+    # partitioning also decides MLlib's per-partition sample(), so this
+    # width — not the pool's — is what the pinned coherences depend on.
     bow_df = widen_for_fit(bow_df, concurrent_fits=min(4, max(1, len(ks))))
-    bow_df.cache()
+    own_bow = _cache_unless_cached(bow_df)
 
-    # Sweep members are INDEPENDENT models — fit them concurrently.
-    # Spark schedules jobs from multiple driver threads fine; each fit
-    # is a small distributed job whose scheduling latency (not compute)
-    # dominates a serial sweep. Same per-k seeds → identical results to
-    # the sequential loop.
+    # Sweep members are INDEPENDENT models — fit them all at once. Each
+    # fit is a chain of small jobs whose scheduling latency (not
+    # compute) dominates, so one thread per k overlaps the waits. Same
+    # per-k seeds → identical results to the sequential loop.
     def fit_one(k: int) -> tuple[int, list[list[str]]]:
         model = fit_lda(bow_df, k=k, max_iter=max_iter, seed=seed)
         desc = model.describeTopics(n_terms).collect()
         return k, [[vocabulary[i] for i in r["termIndices"]] for r in desc]
 
-    with ThreadPoolExecutor(max_workers=min(4, max(1, len(ks)))) as pool:
-        fitted = list(pool.map(fit_one, ks))
-    bow_df.unpersist()
+    def inheriting(fn):
+        # fn, run with a copy of the caller's local properties (job
+        # group, scheduler pool) so its jobs stay attributed to the
+        # caller. One copy per fit: a thread running a SQL action writes
+        # its execution id into it. Without pinned threads
+        # (PYSPARK_PIN_THREAD=false) PySpark returns the session instead
+        # of a wrapper, and there are no per-thread properties to copy.
+        wrap = inheritable_thread_target(spark)
+        return fn if wrap is spark else wrap(fn)
+
+    with ThreadPoolExecutor(max_workers=max(1, len(ks))) as pool:
+        futures = [pool.submit(inheriting(fit_one), k) for k in ks]
+        fitted = [f.result() for f in futures]
+    if own_bow:
+        bow_df.unpersist()
 
     if coherence == "umass":
         # ONE co-occurrence pass over the union of every k's topic
@@ -296,7 +315,18 @@ def lda_sweep(
         for k, topic_terms in fitted:
             coh = cv_coherence(tokens, topic_terms)
             rows.append((k, round(sum(coh) / len(coh) if coh else 0.0, 6)))
+    if own_tokens:
+        tokens.unpersist()
     return spark.createDataFrame(rows, schema="k bigint, coherence double")
+
+
+def _cache_unless_cached(df: DataFrame) -> bool:
+    """Cache ``df`` unless its plan is already cached (by the caller);
+    True when this call cached it, so only its caller unpersists it."""
+    if df.storageLevel != StorageLevel.NONE:
+        return False
+    df.cache()
+    return True
 
 
 def top_5_topics(model, vocabulary: list[str], n_terms: int = 5) -> DataFrame:

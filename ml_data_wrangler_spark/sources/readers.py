@@ -4,7 +4,14 @@ S1 (ticket file scan) and S2 (comments directory scan) re-expressed as
 declarative Spark reads with explicit schemas. The reference's S2 was a
 per-ticket directory rescan (O(tickets × files²), wrangler.py:358-374);
 here it is ONE scan of the directory — at 100 TB that is the difference
-between a single distributed listing+read and an unrunnable loop.
+between a single read and an unrunnable loop.
+
+Directories are read as a root path with ``pathGlobFilter``, never as a
+``dir/*.ext`` glob: Spark lists one root directory on the driver, but a
+glob expands on the driver into one root path per file, and more than
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) root
+paths start a listing job with one task per file — a second listing of
+files the driver has already listed.
 """
 
 from __future__ import annotations
@@ -92,10 +99,17 @@ def read_comment_files(spark: SparkSession, comments_dir: str) -> DataFrame:
     plain_body STRING). ``input_file_name()`` + regexp_extract recovers
     the filename-prefix join key — the declarative analog of the
     reference's ``file.startswith(str(ticket.id))``.
+
+    The directory is listed once, on the driver, and ``pathGlobFilter``
+    keeps its ``*.json`` files (Spark already skips ``_``/``.``-prefixed
+    names such as ``_SUCCESS``). A ``comments_dir/*.json`` glob would
+    hand Spark one root path per file, and past 32 of them Spark lists
+    them again in a job with one task per file (the module docstring).
     """
     raw = (
         spark.read.option("wholetext", "true")
-        .text(f"{comments_dir}/*.json")
+        .option("pathGlobFilter", "*.json")
+        .text(comments_dir)
         .withColumn("_file", F.input_file_name())
     )
     return (

@@ -13,9 +13,11 @@ machinery rather than by a judge's watch-list.
 
 Attribution: each query runs under ``sc.setJobGroup(name, ...)``;
 stages reach the verdict keyed by the job group recorded in the event
-log. Jobs submitted from driver worker threads (e.g. lda_sweep's
-concurrent fits) don't inherit the group (thread-local) and attribute
-to "" — they are reported under UNATTRIBUTED rather than dropped.
+log. The group is a thread-local property: lda_sweep's concurrent fits
+copy it into their pool threads (``inheritable_thread_target``), so
+their jobs attribute to the query. Jobs from a driver thread that does
+not copy it attribute to "" and are reported under UNATTRIBUTED rather
+than dropped.
 """
 
 from __future__ import annotations

@@ -4,7 +4,11 @@ seed-stable; UMass coherence matches a hand-computed value."""
 
 from __future__ import annotations
 
+import json
 import math
+import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import Row
@@ -178,6 +182,102 @@ def test_lda_sweep_rows(documents):
     rows = sweep.collect()
     assert [r["k"] for r in rows] == [2, 3, 4]
     assert all(isinstance(r["coherence"], float) for r in rows)
+
+
+def test_lda_sweep_equals_serial_loop(documents):
+    """Fitting every k at once changes no result: the sweep's rows equal
+    a serial loop of fit_lda + describeTopics + umass_coherence over
+    the same (widened) bow."""
+    from ml_data_wrangler_spark.operators.fitting import widen_for_fit
+
+    model, bow = vectorize(documents, min_df=2.0, max_df=1 << 30)
+    toks = tokens_df(documents)
+    ks = range(2, 7)
+    sweep = lda_sweep(bow, toks, model.vocabulary, ks, max_iter=3, seed=7)
+    wide = widen_for_fit(bow, concurrent_fits=min(4, len(ks)))
+    serial = []
+    for k in ks:
+        desc = fit_lda(wide, k=k, max_iter=3, seed=7).describeTopics(10).collect()
+        coh = umass_coherence(toks, [[model.vocabulary[i] for i in r["termIndices"]] for r in desc])
+        serial.append((k, round(sum(coh) / len(coh), 6)))
+    assert [(r["k"], r["coherence"]) for r in sweep.collect()] == serial
+
+
+def test_lda_sweep_leaves_caller_caches_alone(documents):
+    """The sweep unpersists only what it cached: caller-cached frames
+    stay cached, and uncached ones are left uncached."""
+    from pyspark.storagelevel import StorageLevel
+
+    model, bow = vectorize(documents, min_df=2.0, max_df=1 << 30)
+    toks = tokens_df(documents)
+    lda_sweep(bow, toks, model.vocabulary, range(2, 4), max_iter=2, seed=1)
+    assert bow.storageLevel == StorageLevel.NONE
+    assert toks.storageLevel == StorageLevel.NONE
+    # Already as wide as the session: widen_for_fit hands the sweep the
+    # caller's own frame.
+    bow = bow.repartition(bow.sparkSession.sparkContext.defaultParallelism)
+    bow.cache()
+    toks.cache()
+    try:
+        lda_sweep(bow, toks, model.vocabulary, range(2, 4), max_iter=2, seed=1)
+        assert bow.storageLevel != StorageLevel.NONE
+        assert toks.storageLevel != StorageLevel.NONE
+    finally:
+        bow.unpersist()
+        toks.unpersist()
+
+
+def test_lda_sweep_fits_keep_job_group(spark, documents, jobs_in_group):
+    """The fits run on pool threads, which inherit the caller's job
+    group: their LDA jobs are attributed to it, not left ungrouped."""
+    model, bow = vectorize(documents, min_df=2.0, max_df=1 << 30)
+    toks = tokens_df(documents)
+    jobs = jobs_in_group(
+        "lda-sweep",
+        lambda: lda_sweep(bow, toks, model.vocabulary, range(2, 4), max_iter=2, seed=1),
+    )
+    tracker = spark.sparkContext.statusTracker()
+    stage_names = {
+        stage.name
+        for job in jobs
+        for sid in tracker.getJobInfo(job).stageIds
+        if (stage := tracker.getStageInfo(sid)) is not None
+    }
+    assert any("LDAOptimizer" in name for name in stage_names), stage_names
+
+
+def test_lda_sweep_without_pinned_threads(spark, sf_dir):
+    """With PYSPARK_PIN_THREAD=false (no per-thread local properties)
+    the sweep still runs, and returns what the pinned-thread session
+    returns for the same inputs and parallelism."""
+    cpus = spark.sparkContext.defaultParallelism
+    script = r"""
+import json, sys
+from ml_data_wrangler_spark.operators.lda import lda_sweep
+from ml_data_wrangler_spark.operators.vectorize import tokens_df, vectorize
+from ml_data_wrangler_spark.session import get_spark
+
+spark = get_spark(app_name="unpinned-sweep", cpus=int(sys.argv[2]),
+                  shuffle_partitions=8, driver_memory="1g")
+docs = spark.read.parquet(f"{sys.argv[1]}/documents.parquet")
+model, bow = vectorize(docs, min_df=2.0, max_df=1 << 30)
+rows = lda_sweep(bow, tokens_df(docs), model.vocabulary, range(2, 4), max_iter=2, seed=1)
+print(json.dumps([[r["k"], r["coherence"]] for r in rows.collect()]))
+"""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", script, sf_dir, str(cpus)],
+        capture_output=True, text=True, timeout=300,
+        env={**os.environ, "PYTHONPATH": repo, "PYSPARK_PIN_THREAD": "false"},
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    documents = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    model, bow = vectorize(documents, min_df=2.0, max_df=1 << 30)
+    pinned = lda_sweep(bow, tokens_df(documents), model.vocabulary, range(2, 4),
+                       max_iter=2, seed=1)
+    assert json.loads(out.stdout.splitlines()[-1]) == [
+        [r["k"], r["coherence"]] for r in pinned.collect()
+    ]
 
 
 def test_validate_lda_params_bounds():

@@ -100,6 +100,63 @@ def wrangled(spark, fixture_paths):
     return df
 
 
+def _comment_file(ticket_id: int, n: int) -> dict:
+    return {
+        "comments": [
+            {
+                "id": ticket_id * 10 + n,
+                "created_at": "2024-01-01T12:00:00Z",
+                "plain_body": f"comment {n} on {ticket_id}",
+            }
+        ]
+    }
+
+
+@pytest.fixture(scope="module")
+def wide_comments_dir(tmp_path_factory):
+    """48 ``<id>_<n>.json`` files — more than the 32 root paths past
+    which Spark lists files in a job — plus two files the read must skip."""
+    root = tmp_path_factory.mktemp("wide_comments")
+    for i in range(24):
+        for n in range(2):
+            (root / f"{1000 + i}_{n}.json").write_text(json.dumps(_comment_file(1000 + i, n)))
+    (root / "notes.txt").write_text(json.dumps(_comment_file(7, 0)))
+    (root / "_SUCCESS").write_text(json.dumps(_comment_file(8, 0)))
+    return str(root)
+
+
+def test_comment_dir_read_lists_on_driver(spark, wide_comments_dir, jobs_in_group):
+    """Building the comments read submits no Spark job: the directory
+    is listed once on the driver. A ``dir/*.json`` glob over 48 files
+    would list them again in a job with one task per file."""
+    jobs = jobs_in_group("read-comment-files",
+                         lambda: read_comment_files(spark, wide_comments_dir))
+    assert jobs == []
+
+
+def test_comment_dir_read_skips_other_files(spark, wide_comments_dir):
+    rows = read_comment_files(spark, wide_comments_dir).collect()
+    assert sorted((r["ticket_id"], r["id"]) for r in rows) == sorted(
+        (1000 + i, (1000 + i) * 10 + n) for i in range(24) for n in range(2)
+    )
+    assert all(r["plain_body"] == f"comment {r['id'] % 10} on {r['ticket_id']}" for r in rows)
+
+
+def test_comment_rows_match_fixture_files(spark, fixture_paths):
+    """One row per comment of every array in every §1 fixture file,
+    keyed by the filename's ticket-id prefix — what the former
+    ``comments/*.json`` glob read returned."""
+    _, comments_dir = fixture_paths
+    expected = sorted(
+        (int(fname.split("_")[0]), c["id"], c["created_at"], c["plain_body"])
+        for fname, payload in COMMENT_FILES.items()
+        for arr in payload.values()
+        for c in arr
+    )
+    got = sorted(tuple(r) for r in read_comment_files(spark, comments_dir).collect())
+    assert got == expected
+
+
 def test_reshape_fields(spark, fixture_paths):
     tickets_path, _ = fixture_paths
     rows = {r["id"]: r for r in reshape_tickets(read_tickets(spark, tickets_path)).collect()}
